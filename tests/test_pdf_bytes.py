@@ -25,7 +25,9 @@ from edspdf_spark.sources.pdfgen import make_pdf, paginate, split_lines
 RESOURCES = Path("/root/reference/tests/resources")
 GROUND_TRUTH = Path("/root/reference/tests/pipes/extractors/blocks_ground_truth.py")
 
-pytestmark = pytest.mark.skipif(
+# Only the tests that read the reference fixtures skip without them; the
+# self-contained ones (generator round-trips, hand-built raw PDFs) always run.
+needs_reference = pytest.mark.skipif(
     not RESOURCES.exists(), reason="reference fixtures not available"
 )
 
@@ -64,6 +66,7 @@ def _extract(name: str):
     return blocs, pages, error
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name,var,n",
     [("test.pdf", "pdf_blocks", 41), ("styles.pdf", "styles_blocks", 2)],
@@ -82,6 +85,7 @@ def test_golden_blocks_from_real_bytes(name, var, n):
             assert abs(got[k] - v) < 5e-2, (k, got[k], v)
 
 
+@needs_reference
 def test_blank_pdf():
     blocs, pages, error = _extract("blank.pdf")
     assert not error
@@ -89,6 +93,7 @@ def test_blank_pdf():
     assert blocs == []
 
 
+@needs_reference
 def test_error_pdf_sets_error_flag():
     blocs, pages, error = _extract("error.pdf")
     assert error and blocs == [] and pages == []
@@ -96,6 +101,7 @@ def test_error_pdf_sets_error_flag():
         parse_pdf((RESOURCES / "error.pdf").read_bytes())
 
 
+@needs_reference
 def test_letter_pdf_extracts_text():
     blocs, pages, error = _extract("letter.pdf")
     assert not error
@@ -105,6 +111,7 @@ def test_letter_pdf_extracts_text():
     assert any("CRETEIL" in t for t in texts)
 
 
+@needs_reference
 def test_styles_pdf_style_pairs():
     """Exact (text-slice, style) set of the reference style test, derived
     from real styles.pdf bytes (test_simple.py:64-116)."""
@@ -201,6 +208,7 @@ def test_fused_path_matches_composed_on_pdf_bytes(spark):
     pdfs.unpersist()
 
 
+@needs_reference
 def test_markdown_e2e_from_styles_pdf_bytes():
     """The reference's full-recipe E2E (tests/recipes/
     test_markdown_aggregator.py:39-61): real styles.pdf bytes → extract →
@@ -244,6 +252,7 @@ def test_markdown_e2e_from_styles_pdf_bytes():
     )
 
 
+@needs_reference
 def test_render_pages_reference_image_shapes():
     """Deterministic rasterizer must reproduce the reference's pypdfium2
     image geometry (tests/pipes/extractors/test_pdfminer.py:16-22):
@@ -323,18 +332,15 @@ class TestPdfRoundtripFuzz:
             assert b["bloc_ord"] == i % lpp
 
 
-def test_mutated_pdf_bytes_never_escape_error_contract():
-    """Poison-pill boundary: bit-flipped/truncated/spliced PDF bytes must
-    come back as error=True (or parse), NEVER as a raw exception escaping
-    into a Spark task (8000-mutation sweep ran clean; this is the
-    deterministic CI slice)."""
+def _mutation_sweep(base: bytes, seed: int, trials: int) -> None:
+    """Bit-flip / truncate / delete / splice ``base`` ``trials`` times: each
+    mutant must come back as error=True (or parse), NEVER as a raw
+    exception escaping into a Spark task."""
     import random
 
-    base = make_pdf(paginate(split_lines("alpha beta gamma delta epsilon", 2), 2))
-    ref = (RESOURCES / "styles.pdf").read_bytes()
-    rng = random.Random(1234)
-    for trial in range(300):
-        b = bytearray(base if trial % 2 == 0 else ref)
+    rng = random.Random(seed)
+    for _ in range(trials):
+        b = bytearray(base)
         op = rng.randrange(4)
         if op == 0:
             for _ in range(rng.randrange(1, 8)):
@@ -353,6 +359,20 @@ def test_mutated_pdf_bytes_never_escape_error_contract():
         assert isinstance(error, bool)
 
 
+def test_mutated_pdf_bytes_never_escape_error_contract():
+    """Poison-pill boundary on generated PDF bytes (8000-mutation sweep
+    ran clean; this is the deterministic CI slice)."""
+    base = make_pdf(paginate(split_lines("alpha beta gamma delta epsilon", 2), 2))
+    _mutation_sweep(base, 1234, 150)
+
+
+@needs_reference
+def test_mutated_reference_pdf_bytes_never_escape_error_contract():
+    """Same poison-pill sweep on the reference's styles.pdf bytes."""
+    _mutation_sweep((RESOURCES / "styles.pdf").read_bytes(), 4321, 150)
+
+
+@needs_reference
 def test_letter_pdf_snapshot():
     """Regression pin for the parser on the most complex reference fixture
     (Word-produced: 9 fonts incl. Wingdings/Symbol Type0s; 48 non-empty
