@@ -113,6 +113,11 @@ def _parse_one(blob: Optional[bytes]) -> dict:
             pos = 2
             while pos + 9 < len(b) and b[pos] == 0xFF:
                 marker = b[pos + 1]
+                if marker == 0xFF:  # fill byte before a marker
+                    pos += 1
+                    continue
+                if marker == 0xD9:  # EOI before any frame header
+                    break
                 if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
                     pos += 2
                     continue
@@ -540,7 +545,10 @@ def image_dhash(
                             from edspdf_spark.kernel.webp import decode_webp
 
                             hi, lo = dhash_bits(decode_webp(b))
-                    except ValueError:
+                    except Exception:
+                        # any undecodable blob (truncated IHDR → struct.error,
+                        # corrupt IDAT → zlib.error, …) keeps NULL halves,
+                        # like decode_image_pixels: never a dead task
                         hi = lo = None
                 his.append(hi)
                 los.append(lo)

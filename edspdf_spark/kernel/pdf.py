@@ -1,4 +1,4 @@
-"""Minimal pure-Python PDF text extractor (stdlib-only: ``re`` + ``zlib``).
+"""Minimal pure-Python PDF text extractor (stdlib ``re`` + ``zlib``, NumPy).
 
 pdfminer.six is not installable in this sandbox, yet the reference's own
 test fixtures are real PDF bytes. This module parses the subset of PDF
@@ -17,6 +17,33 @@ pdfminer layout pass the reference depends on
   word-margin space insertion;
 * ``all_texts=False``: text inside Form XObjects (pdfminer ``LTFigure``)
   is NOT part of the page's text lines, so ``Do`` is ignored.
+
+Column layout: the content-stream operator loop stays scalar but builds no
+per-glyph object. Each text show is recorded in a :class:`_GlyphLog` as
+its CID bytes, TJ kerning numbers and text-state scalars (matrix, font,
+size, ``Tc``, ``Tw``, ``Tz``, ``Ts``). Once per document (per batch of
+pages on giant ones), NumPy computes every glyph's advance, x position and
+bbox, the line-grouping and word-margin predicates of each consecutive
+glyph pair and the style-run boundaries, and the lines come out with their
+runs merged into maximal same-``(fontname, upright)`` spans (``fold_runs``
+folds merged runs to the same text and props). Memory is O(glyphs): no
+rows × longest-row padding.
+
+Every float equals a scalar per-glyph evaluation of the same formulas
+(NaN sign and payload bits aside: IEEE 754 leaves them open and they are
+invisible to comparisons and ``float.hex``):
+
+* x positions are a sequential ``np.cumsum`` (a left fold) per chain of
+  shows, over exactly the increments the scalar loop adds, in its order:
+  ``Tc`` before every glyph but the first of an unkerned string, the
+  advance, ``Tw`` after CID 32, minus each TJ number × ``dxscale``. A
+  skipped increment is ``-0.0``, which leaves every value, ``-0.0``
+  included, unchanged;
+* every other sum and product keeps the scalar association order;
+* ``min``/``max`` follow Python's comparison semantics
+  (``np.where(b < a, b, a)``, a first-wins fold per line), not
+  ``np.minimum``/``np.fmin``, so NaN and ±0.0 coordinates from hostile
+  streams group and bound exactly as before.
 
 The output shape matches :func:`edspdf_spark.kernel.payload.parse_payload`
 — ``(pages, lines)`` with lines in absolute bottom-left page coordinates —
@@ -40,6 +67,8 @@ from __future__ import annotations
 import re
 import zlib
 from typing import Dict, List, Optional, Tuple
+
+import numpy as np
 
 __all__ = ["PdfParseError", "parse_pdf", "is_pdf"]
 
@@ -782,18 +811,6 @@ class _Font:
         self.tu_ranges: list = []
         self.encoding: Optional[List[Optional[str]]] = None
 
-    def decode(self, s: bytes) -> List[int]:
-        if self.multibyte:
-            # Identity-H/V: 2-byte big-endian codes
-            return [
-                (s[i] << 8) | (s[i + 1] if i + 1 < len(s) else 0)
-                for i in range(0, len(s), 2)
-            ]
-        return list(s)
-
-    def char_width(self, cid: int) -> float:
-        return self.widths.get(cid, self.default_width) * 0.001
-
     def char_text(self, cid: int) -> str:
         if self.to_unicode is not None:
             u = self.to_unicode.get(cid)
@@ -907,7 +924,9 @@ def _make_font(doc: PdfDocument, spec: dict) -> _Font:
 
 
 # --------------------------------------------------------------------------
-# content-stream interpreter (pdfminer render_string_horizontal semantics)
+# content-stream interpreter: a scalar operator loop records every text
+# show into a column log (_GlyphLog); glyph geometry, line grouping and
+# style runs then run once per document (batch of pages) over whole arrays.
 
 def _mult_matrix(m1, m0):
     a1, b1, c1, d1, e1, f1 = m1
@@ -922,38 +941,9 @@ def _mult_matrix(m1, m0):
     )
 
 
-def _translate_matrix(m, v):
-    a, b, c, d, e, f = m
-    x, y = v
-    return (a, b, c, d, x * a + y * c + e, x * b + y * d + f)
-
-
-def _apply_matrix_pt(m, p):
-    a, b, c, d, e, f = m
-    x, y = p
-    return (a * x + c * y + e, b * x + d * y + f)
-
-
 _MATRIX_ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 _OP_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
-
-
-class _Char:
-    """pdfminer LTChar equivalent (geometry + text + style source)."""
-
-    __slots__ = ("x0", "y0", "x1", "y1", "text", "fontname", "upright", "height", "width")
-
-    def __init__(self, x0, y0, x1, y1, text, fontname, upright):
-        self.x0 = x0
-        self.y0 = y0
-        self.x1 = x1
-        self.y1 = y1
-        self.text = text
-        self.fontname = fontname
-        self.upright = upright
-        self.width = x1 - x0
-        self.height = y1 - y0
 
 
 def _tokenize_content(data: bytes):
@@ -995,9 +985,13 @@ def _tokenize_content(data: bytes):
 
 
 class _TextState:
+    """Text state. The line matrix's x is held by reference: ``xsrc`` is
+    -1 at the line origin (x = 0.0) or the page-log element whose end x
+    it is; its y is 0.0 throughout (no operator moves it within a line)."""
+
     __slots__ = (
         "font", "fontsize", "charspace", "wordspace", "scaling", "leading",
-        "rise", "matrix", "linematrix",
+        "rise", "matrix", "xsrc",
     )
 
     def __init__(self):
@@ -1009,7 +1003,7 @@ class _TextState:
         self.leading = 0.0
         self.rise = 0.0
         self.matrix = _MATRIX_ID
-        self.linematrix = (0.0, 0.0)
+        self.xsrc = -1
 
     def copy(self) -> "_TextState":
         c = _TextState.__new__(_TextState)
@@ -1018,75 +1012,297 @@ class _TextState:
         return c
 
 
-def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
+# layout analysis (pdfminer group_objects with line_overlap=0.5,
+# char_margin=2.05, word_margin=0.1; detect_vertical=False)
+_LINE_OVERLAP = 0.5
+_CHAR_MARGIN = 2.05
+_WORD_MARGIN = 0.1
+
+
+def _lt(a, b):
+    """Python ``min(a, b)`` elementwise: ``b`` only if it compares less."""
+    return np.where(b < a, b, a)
+
+
+def _gt(a, b):
+    """Python ``max(a, b)`` elementwise: ``b`` only if it compares greater."""
+    return np.where(b > a, b, a)
+
+
+def _seg_fold(v: "np.ndarray", starts: "np.ndarray", lowest: bool) -> "np.ndarray":
+    """Python ``min()`` (``lowest``) or ``max()`` over each segment of ``v``
+    opening at ``starts``: the sequential fold keeps its first value unless
+    a later one compares strictly less (greater). So NaN never replaces
+    (a leading NaN stays), and of equal zeros the first one's sign wins."""
+    nan = np.isnan(v)
+    if lowest:
+        out = np.minimum.reduceat(np.where(nan, np.inf, v), starts)
+    else:
+        out = np.maximum.reduceat(np.where(nan, -np.inf, v), starts)
+    zero_segs = np.flatnonzero(out == 0)
+    if len(zero_segs):
+        zeros = np.flatnonzero(v == 0)
+        seg_of_zero = np.searchsorted(starts, zeros, "right") - 1
+        out[zero_segs] = v[zeros[np.searchsorted(seg_of_zero, zero_segs)]]
+    return np.where(nan[starts], v[starts], out)
+
+
+# A log batches pages (per-call NumPy overhead is amortised over a whole
+# short document) but is flushed at the first page boundary past this many
+# elements, which bounds the pass's temporaries (~350 B per element) on
+# giant documents.
+_LOG_FLUSH_ELEMENTS = 1 << 16
+
+
+class _GlyphLog:
+    """Column log of the text shows of one or more consecutive pages.
+
+    The operator loop appends, per show, its text-state scalars and its
+    items, which become *elements* of the log's x stream: one per
+    glyph, one per TJ kerning number, one opening each row. A row is a
+    chain of shows the line-matrix x carries through (no reset between
+    them); it opens with its start value: 0.0 at the line origin, or the
+    end x of an earlier element when ``Q`` restores a saved x. Each
+    element owns three x increments (charspace, advance, wordspace for a
+    glyph; the kerning shift for a number; the start value for a row), so
+    a row's x sequence is one sequential ``np.cumsum`` over its slots: the
+    same float adds, in the same order, as pdfminer's per-glyph loop.
+    Slots a glyph skips hold -0.0, which adds exactly nothing (even to
+    -0.0). Memory is O(elements): rows are slices of one flat stream.
+    """
+
+    def __init__(self):
+        self.fonts: List[_Font] = []
+        self.font_idx: Dict[int, int] = {}
+        self.styles: List[Tuple[str, bool]] = []
+        self.style_idx: Dict[Tuple[str, bool], int] = {}
+        self.consts: List[tuple] = []  # per show: the scalars lines() unpacks
+        self.show_font: List[int] = []
+        self.show_style: List[int] = []
+        self.show_page: List[int] = []
+        self.row_pos: List[int] = []  # element opening each row
+        self.row_src: List[int] = []  # its start: -1 (0.0) or an element's end x
+        self.kern_pos: List[int] = []
+        self.kern_val: List[float] = []
+        self.str_pos: List[int] = []  # first element of each glyph string
+        self.str_len: List[int] = []
+        self.str_show: List[int] = []
+        self.str_opens: List[bool] = []  # string opens its show: no Tc first
+        self.str_multibyte: List[bool] = []
+        self.str_bytes: List[bytes] = []
+        self.n_elem = 0
+        self.page = 0
+        self.tail: Optional[int] = None  # last element of the current row
+
+    def start_page(self, page_num: int) -> None:
+        self.page = page_num
+        self.tail = None  # rows never cross pages
+
+    def show(self, ts: _TextState, ctm, seq) -> None:
+        """Record one Tj/TJ/'/" (pdfminer render_string_horizontal)."""
+        font = ts.font
+        if font is None:
+            return
+        fontsize = ts.fontsize
+        scaling = ts.scaling * 0.01
+        dxscale = 0.001 * fontsize * scaling
+        multibyte = font.multibyte
+        items = []
+        for obj in seq:
+            if isinstance(obj, (int, float)):
+                items.append(-(obj * dxscale))
+            elif isinstance(obj, bytes) and obj:
+                if multibyte and len(obj) % 2:
+                    obj += b"\x00"  # Identity-H: a trailing odd byte is the high one
+                items.append(obj)
+        if not items:
+            return  # x unchanged
+        pos = self.n_elem
+        if ts.xsrc != self.tail:
+            self.row_pos.append(pos)
+            self.row_src.append(ts.xsrc)
+            pos += 1
+        show = len(self.consts)
+        for i, item in enumerate(items):
+            if isinstance(item, float):
+                self.kern_pos.append(pos)
+                self.kern_val.append(item)
+                pos += 1
+            else:
+                n = len(item) // 2 if multibyte else len(item)
+                self.str_pos.append(pos)
+                self.str_len.append(n)
+                self.str_show.append(show)
+                self.str_opens.append(i == 0)
+                self.str_multibyte.append(multibyte)
+                self.str_bytes.append(item)
+                pos += n
+        self.n_elem = pos
+        self.tail = ts.xsrc = pos - 1
+
+        a, b, c, d, e, f = _mult_matrix(ts.matrix, ctm)
+        descent = font.descent * fontsize
+        dr = descent + ts.rise
+        drf = descent + ts.rise + fontsize
+        self.consts.append((
+            fontsize, scaling, ts.charspace * scaling,
+            0.0 if multibyte else ts.wordspace * scaling,
+            a, b, e, f, 0.0 * c, 0.0 * d,
+            a * 0.0 + c * dr, b * 0.0 + d * dr, c * drf, d * drf,
+        ))
+        fi = self.font_idx.get(id(font))
+        if fi is None:
+            fi = self.font_idx[id(font)] = len(self.fonts)
+            self.fonts.append(font)
+        self.show_font.append(fi)
+        style = (font.fontname, (0 < a * d * scaling) and (b * c <= 0))
+        si = self.style_idx.get(style)
+        if si is None:
+            si = self.style_idx[style] = len(self.styles)
+            self.styles.append(style)
+        self.show_style.append(si)
+        self.show_page.append(self.page)
+
+    @np.errstate(all="ignore")  # inf/NaN geometry is data, not an error
+    def lines(self) -> list:
+        """All glyphs → ``(page_num, x0, y0, x1, y1, runs)`` lines, runs
+        merged into maximal same-``(fontname, upright)`` spans."""
+        if not self.str_len:
+            return []
+        str_len = np.array(self.str_len, np.int64)
+        n_glyphs = int(str_len.sum())
+        str_first = np.cumsum(str_len) - str_len  # glyph index of each string's first
+        g_show = np.repeat(np.array(self.str_show, np.int64), str_len)
+        g_elem = np.arange(n_glyphs) + np.repeat(
+            np.array(self.str_pos, np.int64) - str_first, str_len
+        )
+        glyph_mb = np.repeat(np.array(self.str_multibyte), str_len)
+        cids = np.empty(n_glyphs, np.int64)
+        cids[glyph_mb] = np.frombuffer(
+            b"".join(s for s, m in zip(self.str_bytes, self.str_multibyte) if m), ">u2"
+        )
+        cids[~glyph_mb] = np.frombuffer(
+            b"".join(s for s, m in zip(self.str_bytes, self.str_multibyte) if not m),
+            np.uint8,
+        )
+        (fs, sc, cs, ws, a, b, e, f, yc, yd, k0x, k0y, cdrf, ddrf) = np.array(
+            self.consts, np.float64
+        ).T[:, g_show]
+
+        # per distinct (font, cid): text and width, looked up once
+        g_font = np.array(self.show_font, np.int64)[g_show]
+        keys, inv = np.unique(g_font * 65536 + cids, return_inverse=True)
+        u_text, u_width = [], []
+        for k in keys.tolist():
+            font, cid = self.fonts[k >> 16], k & 0xFFFF
+            u_text.append(font.char_text(cid))
+            u_width.append(font.widths.get(cid, font.default_width) * 0.001)
+        adv = np.array(u_width)[inv] * fs * sc
+
+        # x stream: three slots per element, one sequential cumsum per row
+        slots = np.full((self.n_elem, 3), -0.0)
+        slots[self.row_pos, 0] = 0.0
+        slots[self.kern_pos, 0] = self.kern_val
+        no_tc = np.zeros(n_glyphs, bool)
+        no_tc[str_first[np.array(self.str_opens)]] = True
+        slots[g_elem, 0] = np.where(no_tc, -0.0, cs)
+        slots[g_elem, 1] = adv
+        slots[g_elem, 2] = np.where((cids == 32) & (ws != 0), ws, -0.0)
+        flat = slots.reshape(-1)
+        cum = np.empty_like(flat)
+        bounds = [3 * p for p in self.row_pos] + [len(flat)]
+        for r, src in enumerate(self.row_src):
+            lo, hi = bounds[r], bounds[r + 1]
+            if src >= 0:
+                flat[lo] = cum[3 * src + 2]
+            np.cumsum(flat[lo:hi], out=cum[lo:hi])
+        x = cum[3 * g_elem]
+
+        # LTChar bbox: (0, descent+rise)-(adv, descent+rise+size) through
+        # the show's matrix translated to (x, 0); every sum keeps
+        # pdfminer's association order
+        ex = x * a + yc + e
+        fy = x * b + yd + f
+        p0x, p1x = k0x + ex, a * adv + cdrf + ex
+        p0y, p1y = k0y + fy, b * adv + ddrf + fy
+        x_le, y_le = p0x <= p1x, p0y <= p1y
+        x0, x1 = np.where(x_le, p0x, p1x), np.where(x_le, p1x, p0x)
+        y0, y1 = np.where(y_le, p0y, p1y), np.where(y_le, p1y, p0y)
+        w, h = x1 - x0, y1 - y0
+
+        # group_objects: glyph i joins glyph i-1's line iff the pair aligns
+        # (and both sit on the same page)
+        p, q = slice(None, -1), slice(1, None)
+        vo = np.where(
+            (y0[q] <= y1[p]) & (y0[p] <= y1[q]),
+            _lt(np.abs(y0[p] - y1[q]), np.abs(y1[p] - y0[q])),
+            0.0,
+        )
+        hd = np.where(
+            (x0[q] <= x1[p]) & (x0[p] <= x1[q]),
+            0.0,
+            _lt(np.abs(x0[p] - x1[q]), np.abs(x1[p] - x0[q])),
+        )
+        g_page = np.array(self.show_page, np.int64)[g_show]
+        joins = (
+            (vo > _LINE_OVERLAP * _lt(h[p], h[q]))
+            & (hd < _CHAR_MARGIN * _gt(w[p], w[q]))
+            & (g_page[q] == g_page[p])
+        )
+        # word margin: a space opens glyph i when the gap after i-1 is wide
+        space = np.zeros(n_glyphs, bool)
+        space[1:] = joins & (x1[p] < x0[q] - _WORD_MARGIN * _gt(w[q], h[q]))
+        line_starts = np.flatnonzero(np.concatenate(([True], ~joins)))
+        g_style = np.array(self.show_style, np.int64)[g_show]
+        run_starts = np.flatnonzero(
+            np.concatenate(([True], ~joins | (g_style[q] != g_style[p])))
+        )
+
+        # document text: each glyph's code points, a space before the
+        # spaced ones; runs are slices of it
+        u_len = np.array([len(t) for t in u_text], np.int64)
+        u_cp = np.frombuffer(
+            "".join(u_text).encode("utf-32-le", "surrogatepass"), "<u4"
+        )
+        g_len = u_len[inv]
+        offsets = np.zeros(n_glyphs + 1, np.int64)
+        np.cumsum(g_len + space, out=offsets[1:])
+        buf = np.empty(int(offsets[-1]), "<u4")
+        buf[offsets[:-1][space]] = 32
+        # code point j of glyph i: buf[text start of i + j] = u_cp[start of
+        # i's text in u_cp + j]
+        glyph = np.repeat(np.arange(n_glyphs), g_len)
+        j = np.arange(len(glyph)) - np.repeat(np.cumsum(g_len) - g_len, g_len)
+        u_start = np.cumsum(u_len) - u_len
+        buf[(offsets[:-1] + space)[glyph] + j] = u_cp[u_start[inv][glyph] + j]
+        text = buf.tobytes().decode("utf-32-le", "surrogatepass")
+
+        cut = offsets[run_starts].tolist() + [len(text)]
+        runs = [
+            self.styles[s] + (text[lo:hi],)
+            for s, lo, hi in zip(g_style[run_starts].tolist(), cut, cut[1:])
+        ]
+        first_run = np.searchsorted(run_starts, line_starts).tolist() + [len(runs)]
+        return [
+            (pn, bx0, by0, bx1, by1, runs[first_run[i] : first_run[i + 1]])
+            for i, (pn, bx0, by0, bx1, by1) in enumerate(zip(
+                g_page[line_starts].tolist(),
+                _seg_fold(x0, line_starts, True).tolist(),
+                _seg_fold(y0, line_starts, True).tolist(),
+                _seg_fold(x1, line_starts, False).tolist(),
+                _seg_fold(y1, line_starts, False).tolist(),
+            ))
+        ]
+
+
+def _interpret_page(doc: PdfDocument, page: dict, ctm, log: _GlyphLog) -> None:
     content = doc.content_bytes(page)
     resources = doc.get(page, "Resources") or {}
     fonts_res = doc.get(resources, "Font") or {}
 
-    chars: List[_Char] = []
     ts = _TextState()
     gs_stack: List[tuple] = []
     args: List[object] = []
-
-    def render_string(seq) -> None:
-        font = ts.font
-        if font is None:
-            return
-        matrix = _mult_matrix(ts.matrix, ctm)
-        fontsize = ts.fontsize
-        scaling = ts.scaling * 0.01
-        charspace = ts.charspace * scaling
-        wordspace = 0.0 if font.multibyte else ts.wordspace * scaling
-        rise = ts.rise
-        dxscale = 0.001 * fontsize * scaling
-        x, y = ts.linematrix
-        needcharspace = False
-        descent = font.descent * fontsize
-        # hot loop: everything but x is constant per string — hoist the
-        # translate/apply-matrix algebra out of the per-char calls. Every
-        # retained expression keeps the ORIGINAL association order
-        # (x*a + y*c + e etc.), so geometry stays bit-identical to the
-        # pre-optimization kernel (pinned by test_letter_pdf_snapshot).
-        a, b, c, d, e, f = matrix
-        upright = (0 < a * d * scaling) and (b * c <= 0)
-        yc = y * c
-        yd = y * d
-        dr = descent + rise
-        drf = descent + rise + fontsize
-        cdr = c * dr
-        ddr = d * dr
-        cdrf = c * drf
-        ddrf = d * drf
-        cw = font.char_width
-        ct = font.char_text
-        fontname = font.fontname
-        decode = font.decode
-        append = chars.append
-        for obj in seq:
-            if isinstance(obj, (int, float)):
-                x -= obj * dxscale
-                needcharspace = True
-                continue
-            if not isinstance(obj, bytes):
-                continue
-            for cid in decode(obj):
-                if needcharspace:
-                    x += charspace
-                adv = cw(cid) * fontsize * scaling
-                ex = x * a + yc + e
-                fy = x * b + yd + f
-                p0x = a * 0.0 + cdr + ex
-                p0y = b * 0.0 + ddr + fy
-                p1x = a * adv + cdrf + ex
-                p1y = b * adv + ddrf + fy
-                x0, x1 = (p0x, p1x) if p0x <= p1x else (p1x, p0x)
-                y0, y1 = (p0y, p1y) if p0y <= p1y else (p1y, p0y)
-                append(_Char(x0, y0, x1, y1, ct(cid), fontname, upright))
-                x += adv
-                if cid == 32 and wordspace:
-                    x += wordspace
-                needcharspace = True
-        ts.linematrix = (x, y)
 
     for kind, val in _tokenize_content(content):
         if kind == "operand":
@@ -1107,7 +1323,7 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
                 ctm = _mult_matrix(tuple(float(v) for v in args[-6:]), ctm)
             elif op == "BT":
                 ts.matrix = _MATRIX_ID
-                ts.linematrix = (0.0, 0.0)
+                ts.xsrc = -1
             elif op == "Tf" and len(args) >= 2:
                 fname = args[-2]
                 ts.fontsize = float(args[-1])
@@ -1117,19 +1333,19 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
                 ts.matrix = _mult_matrix(
                     (1, 0, 0, 1, float(args[-2]), float(args[-1])), ts.matrix
                 )
-                ts.linematrix = (0.0, 0.0)
+                ts.xsrc = -1
             elif op == "TD" and len(args) >= 2:
                 ts.leading = -float(args[-1])
                 ts.matrix = _mult_matrix(
                     (1, 0, 0, 1, float(args[-2]), float(args[-1])), ts.matrix
                 )
-                ts.linematrix = (0.0, 0.0)
+                ts.xsrc = -1
             elif op == "Tm" and len(args) >= 6:
                 ts.matrix = tuple(float(v) for v in args[-6:])
-                ts.linematrix = (0.0, 0.0)
+                ts.xsrc = -1
             elif op == "T*":
                 ts.matrix = _mult_matrix((1, 0, 0, 1, 0.0, -ts.leading), ts.matrix)
-                ts.linematrix = (0.0, 0.0)
+                ts.xsrc = -1
             elif op == "TL" and args:
                 ts.leading = float(args[-1])
             elif op == "Tc" and args:
@@ -1141,19 +1357,19 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
             elif op == "Ts" and args:
                 ts.rise = float(args[-1])
             elif op == "Tj" and args:
-                render_string([args[-1]])
+                log.show(ts, ctm, [args[-1]])
             elif op == "TJ" and args and isinstance(args[-1], list):
-                render_string(args[-1])
+                log.show(ts, ctm, args[-1])
             elif op == "'" and args:
                 ts.matrix = _mult_matrix((1, 0, 0, 1, 0.0, -ts.leading), ts.matrix)
-                ts.linematrix = (0.0, 0.0)
-                render_string([args[-1]])
+                ts.xsrc = -1
+                log.show(ts, ctm, [args[-1]])
             elif op == '"' and len(args) >= 3:
                 ts.wordspace = float(args[-3])
                 ts.charspace = float(args[-2])
                 ts.matrix = _mult_matrix((1, 0, 0, 1, 0.0, -ts.leading), ts.matrix)
-                ts.linematrix = (0.0, 0.0)
-                render_string([args[-1]])
+                ts.xsrc = -1
+                log.show(ts, ctm, [args[-1]])
             # Do (XObjects) intentionally ignored: LAParams.all_texts=False
             # keeps figure text out of page lines (reference default).
         except PdfParseError:
@@ -1165,90 +1381,6 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
         except (TypeError, ValueError):
             pass
         args = []
-    return chars
-
-
-# --------------------------------------------------------------------------
-# layout analysis: chars → horizontal lines (pdfminer group_objects with
-# line_overlap=0.5, char_margin=2.05, word_margin=0.1; detect_vertical=False)
-
-_LINE_OVERLAP = 0.5
-_CHAR_MARGIN = 2.05
-_WORD_MARGIN = 0.1
-
-
-def _hdistance(a: _Char, b: _Char) -> float:
-    if b.x0 <= a.x1 and a.x0 <= b.x1:
-        return 0.0
-    return min(abs(a.x0 - b.x1), abs(a.x1 - b.x0))
-
-
-def _voverlap(a: _Char, b: _Char) -> float:
-    if b.y0 <= a.y1 and a.y0 <= b.y1:
-        return min(abs(a.y0 - b.y1), abs(a.y1 - b.y0))
-    return 0.0
-
-
-def _group_lines(chars: List[_Char]) -> List[List[_Char]]:
-    """pdfminer LTLayoutContainer.group_objects, horizontal-only.
-    The pair test inlines :func:`_voverlap` / :func:`_hdistance`
-    (same expressions — they stay as the documented reference and for
-    tests) — this loop runs once per char on every page."""
-    lines: List[List[_Char]] = []
-    line: Optional[List[_Char]] = None
-    obj0: Optional[_Char] = None
-    for obj1 in chars:
-        if obj0 is not None:
-            # _voverlap(obj0, obj1) > _LINE_OVERLAP * min(heights)
-            if obj1.y0 <= obj0.y1 and obj0.y0 <= obj1.y1:
-                vo = min(abs(obj0.y0 - obj1.y1), abs(obj0.y1 - obj1.y0))
-            else:
-                vo = 0.0
-            halign = vo > _LINE_OVERLAP * min(obj0.height, obj1.height)
-            if halign:
-                # _hdistance(obj0, obj1) < _CHAR_MARGIN * max(widths)
-                if obj1.x0 <= obj0.x1 and obj0.x0 <= obj1.x1:
-                    hd = 0.0
-                else:
-                    hd = min(abs(obj0.x0 - obj1.x1), abs(obj0.x1 - obj1.x0))
-                halign = hd < _CHAR_MARGIN * max(obj0.width, obj1.width)
-            if halign and line is not None:
-                line.append(obj1)
-            elif line is not None:
-                lines.append(line)
-                line = None
-            elif halign:
-                line = [obj0, obj1]
-            else:
-                lines.append([obj0])
-        obj0 = obj1
-    if line is None:
-        line = []
-        if obj0 is not None:
-            line.append(obj0)
-    if line:
-        lines.append(line)
-    return lines
-
-
-def _line_to_runs(line: List[_Char]):
-    """One grouped line → (bbox, runs) with word-margin space insertion
-    (pdfminer LTTextLineHorizontal.add): a space run is emitted when the
-    horizontal gap before a char exceeds word_margin × max(w, h)."""
-    x0 = min(c.x0 for c in line)
-    y0 = min(c.y0 for c in line)
-    x1 = max(c.x1 for c in line)
-    y1 = max(c.y1 for c in line)
-    runs: List[Tuple[str, bool, str]] = []
-    prev_x1 = None
-    for c in line:
-        if prev_x1 is not None:
-            margin = _WORD_MARGIN * max(c.width, c.height)
-            if prev_x1 < c.x0 - margin:
-                runs.append(("", True, " "))  # LTAnno: style inherited by fold
-        prev_x1 = c.x1
-        runs.append((c.fontname, c.upright, c.text))
-    return (x0, y0, x1, y1), runs
 
 
 # --------------------------------------------------------------------------
@@ -1259,7 +1391,8 @@ def parse_pdf(data: bytes):
 
     pages : list of (page_num, width, height)
     lines : list of (page_num, x0, y0, x1, y1, runs) — absolute coords,
-            origin bottom-left; runs = list of (fontname, upright, text).
+            origin bottom-left; runs = list of (fontname, upright, text),
+            adjacent same-(fontname, upright) glyphs merged into one run.
 
     Raises PdfParseError on malformed/unsupported input. This is the
     poison-pill boundary (the reference maps any pdfminer PDFException to
@@ -1279,9 +1412,10 @@ def parse_pdf(data: bytes):
         raise PdfParseError("no pages")
 
     pages: List[Tuple[int, float, float]] = []
-    lines: List[Tuple[int, float, float, float, float, list]] = []
-    for page_num, page in enumerate(page_dicts):
-        try:
+    lines: list = []
+    log = _GlyphLog()
+    try:
+        for page_num, page in enumerate(page_dicts):
             mb = doc.get(page, "MediaBox") or [0, 0, 612, 792]
             mb = [float(doc.resolve(v)) for v in mb]
             mx0, my0 = min(mb[0], mb[2]), min(mb[1], mb[3])
@@ -1299,12 +1433,14 @@ def parse_pdf(data: bytes):
             else:
                 ctm = (1.0, 0.0, 0.0, 1.0, -mx0, -my0)
             pages.append((page_num, width, height))
-            chars = _interpret_page(doc, page, ctm)
-        except PdfParseError:
-            raise
-        except Exception as exc:  # corrupt page — poison-pill boundary
-            raise PdfParseError(f"{type(exc).__name__}: {exc}") from exc
-        for line in _group_lines(chars):
-            (x0, y0, x1, y1), runs = _line_to_runs(line)
-            lines.append((page_num, x0, y0, x1, y1, runs))
+            log.start_page(page_num)
+            _interpret_page(doc, page, ctm, log)
+            if log.n_elem > _LOG_FLUSH_ELEMENTS:
+                lines.extend(log.lines())
+                log = _GlyphLog()
+        lines.extend(log.lines())
+    except PdfParseError:
+        raise
+    except Exception as exc:  # corrupt page — poison-pill boundary
+        raise PdfParseError(f"{type(exc).__name__}: {exc}") from exc
     return pages, lines

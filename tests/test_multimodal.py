@@ -443,3 +443,54 @@ def test_media_meta_real_codec_headers():
     for blob in (b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"RIFF1234WEBP",
                  b"GIF89a", None, b""):
         _parse_one(blob)
+
+
+def test_image_dhash_corrupt_png_keeps_null_halves(spark):
+    """A truncated IHDR (struct.error) or a corrupt IDAT (zlib.error) is an
+    undecodable blob: NULL halves for that row, the task and the valid
+    rows beside it survive."""
+    import numpy as np
+
+    from edspdf_spark.functions.multimodal import encode_png, image_dhash
+
+    png = encode_png((np.arange(72, dtype=np.uint8) * 7).reshape(8, 9))
+    ihdr = png.index(b"IHDR")
+    idat = png.index(b"IDAT")
+    truncated = png[: ihdr + 10]
+    corrupt = (
+        png[: idat + 4]
+        + bytes(b ^ 0x5A for b in png[idat + 4 : idat + 14])
+        + png[idat + 14 :]
+    )
+    df = spark.createDataFrame(
+        [(0, bytearray(png)), (1, bytearray(truncated)), (2, bytearray(corrupt))],
+        "doc_id long, media binary",
+    )
+    rows = {r.doc_id: r for r in image_dhash(df).collect()}
+    assert rows[0].dhash_hi is not None and rows[0].dhash_lo is not None
+    for did in (1, 2):
+        assert rows[did].dhash_hi is None and rows[did].dhash_lo is None
+
+
+def test_media_meta_jpeg_fill_bytes_and_eoi():
+    """The JPEG SOF walk skips 0xFF fill bytes before a marker and stops
+    at EOI instead of reading a segment length that is not there."""
+    import numpy as np
+
+    from edspdf_spark.functions.multimodal import _parse_one
+    from edspdf_spark.kernel.jpeg import encode_jpeg
+
+    jpeg = encode_jpeg(np.arange(60, dtype=np.uint8).reshape(4, 5, 3), quality=80)
+    filled = jpeg[:2] + b"\xff\xff" + jpeg[2:]
+    m = _parse_one(filled)
+    assert (m["media_type"], m["width"], m["height"], m["channels"]) == (
+        "image", 5, 4, 3,
+    )
+    # SOI, EOI, then bytes that read as a 2-byte length would land on a
+    # fake SOF0 claiming 32x16: the image ended, so no dims
+    after_eoi = (
+        b"\xff\xd8\xff\xd9\x00\x02\xff\xc0\x00\x11\x08\x00\x10\x00\x20\x03"
+        + b"\x00" * 12
+    )
+    m = _parse_one(after_eoi)
+    assert (m["media_type"], m["width"], m["height"]) == (None, None, None)

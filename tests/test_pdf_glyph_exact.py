@@ -27,7 +27,6 @@ import sys
 import zlib
 from pathlib import Path
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -212,6 +211,14 @@ _HAND_STREAMS = {
         b" BT /F2 -10 Tf 1 0 0 1 80 80 Tm (neg size) Tj ET"
         b" BT /F1 10 Tf 5 Ts -1 0 -0.0 -1 -0.0 -0.0 Tm <0045> Tj ET"
     ],
+    # one line holding a glyph whose right edge is +0.0 and one whose right
+    # edge is -0.0: the line's x1 is the FIRST zero (Python max), either order
+    "signed_zero_line": [
+        b"BT /F1 10 Tf 5 Ts 1 0 0 1 -5 -116 Tm <0041> Tj"
+        b" -1 0 -0.0 -1 -0.0 -100 Tm <0042> Tj ET"
+        b" BT /F1 10 Tf 5 Ts -1 0 -0.0 -1 -0.0 -300 Tm <0043> Tj"
+        b" 1 0 0 1 -5 -316 Tm <0044> Tj ET"
+    ],
     "junk_operands": [
         b"BT /F1 10 Tf 100 700 Td [(ab) /N <0041> [1] true 5 null <0042>] TJ"
         b" 7 Tj /Nope 10 Tf <0041> Tj /F1 10 Tf (x) Tj 3 ' /N Tc (y) Tj"
@@ -314,6 +321,17 @@ def test_parse_matches_committed_snapshot():
         assert describe(data) == want[name], name
 
 
+def test_snapshot_holds_when_every_page_flushes_the_log(monkeypatch):
+    """Giant documents flush the glyph log at page boundaries; output must
+    not depend on where the batches break."""
+    from edspdf_spark.kernel import pdf
+
+    monkeypatch.setattr(pdf, "_LOG_FLUSH_ELEMENTS", 0)
+    want = json.loads(SNAPSHOT.read_text())
+    for name, data in snapshot_corpus():
+        assert describe(data) == want[name], name
+
+
 def test_snapshot_corpus_reaches_the_edge_cases():
     """Guard the snapshot's coverage: it must contain poison pills, NaN
     and infinite geometry, signed zeros and multi-run lines."""
@@ -403,7 +421,8 @@ def _replica_page_chars(doc, page, ctm):
                       b * adv + d * (descent + st_["ts"] + size) + ty)
                 x0, x1 = (p0[0], p1[0]) if p0[0] <= p1[0] else (p1[0], p0[0])
                 y0, y1 = (p0[1], p1[1]) if p0[1] <= p1[1] else (p1[1], p0[1])
-                chars.append((x0, y0, x1, y1, font.char_text(cid), font.fontname, upright))
+                text = font.char_text(cid)
+                chars.append((x0, y0, x1, y1, text, font.fontname, upright))
                 x += adv
                 if cid == 32 and wordspace:
                     x += wordspace
@@ -605,7 +624,11 @@ _tj = st.builds(
 )
 _op = st.one_of(
     st.builds(lambda f, s: b"/F%d %s Tf" % (f, s), st.integers(1, 5), _nums),
-    st.builds(lambda op, v: v + b" " + op, st.sampled_from([b"Tc", b"Tw", b"Tz", b"Ts", b"TL"]), _nums),
+    st.builds(
+        lambda op, v: v + b" " + op,
+        st.sampled_from([b"Tc", b"Tw", b"Tz", b"Ts", b"TL"]),
+        _nums,
+    ),
     st.builds(lambda x, y: x + b" " + y + b" Td", _nums, _nums),
     st.builds(lambda x, y: x + b" " + y + b" TD", _nums, _nums),
     st.builds(lambda m: b" ".join(m) + b" Tm", st.lists(_nums, min_size=6, max_size=6)),
