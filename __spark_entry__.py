@@ -3558,18 +3558,20 @@ FROM pages GROUP BY doc_id
 
 
 def _q_extract_metrics(spark, sf_dir):
-    """In-band lineage/metrics (metrics.py): the extract stage emits one
-    metrics row per scan partition in the SAME pass as the blocs (union-typed
-    frame, no second job, no accumulator loss on retry). Partition-level rows
-    depend on the scan split layout, so the oracle checks the
-    partitioning-INDEPENDENT aggregate: total docs/blocs/errors across all
-    partitions, which the deterministic page layout (6 words/line) makes
-    SQL-derivable from documents.text."""
+    """In-band lineage/metrics (metrics.py): the fused stage emits one
+    metrics row per scan partition in the SAME pass as the aggregates
+    (union-typed frame, no second job, no accumulator loss on retry).
+    Partition-level rows depend on the scan split layout, so the oracle
+    checks the partitioning-INDEPENDENT aggregate: total docs/blocs/errors
+    across all partitions, which the deterministic page layout (6
+    words/line) makes SQL-derivable from documents.text."""
     from edspdf_spark.fixtures import pages_from_documents
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.operators import run_pipeline_fused_with_metrics
 
     pages = pages_from_documents(spark, sf_dir)
-    _blocs, metrics, _cached = extract_blocs_with_metrics(pages, run_id="driver")
+    _agg, metrics, _cached = run_pipeline_fused_with_metrics(
+        pages, "driver", [("body", 0.0, 0.0, 1.0, 0.6)], threshold=0.1
+    )
     return metrics.groupBy("run_id").agg(
         F.sum("n_docs").alias("total_docs"),
         F.sum("n_blocs").alias("total_blocs"),
@@ -5204,7 +5206,7 @@ def _q_snapshot_job(spark, sf_dir):
 
     from edspdf_spark.fixtures import pages_from_documents
     from edspdf_spark.job import batch_expr, job_tables, run_snapshot_job
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.operators import run_pipeline_fused_with_metrics
 
     base = tempfile.mkdtemp(prefix="edspdf_snapjob_")
     try:
@@ -5216,7 +5218,9 @@ def _q_snapshot_job(spark, sf_dir):
         )
         # crash #2: batch-00002's metrics land, its data does not
         part = pages.where(batch_expr(4) == 2)
-        _, metrics, cached = extract_blocs_with_metrics(part, run_id="batch-00002")
+        _, metrics, cached = run_pipeline_fused_with_metrics(
+            part, "batch-00002", masks, threshold=0.1
+        )
         _, met_t = job_tables(spark, base)
         met_t.append(metrics, "batch-00002")
         cached.unpersist()

@@ -2,10 +2,11 @@
 end-to-end through the real operators.
 
 ``run_snapshot_job`` splits the input into ``n_batches`` deterministic
-url-hash batches and, per batch, runs extract → classify → aggregate
-(single in-band pass also yielding the per-partition lineage/metrics
-rows, `metrics.py`) and commits BOTH frames to snapshot tables
-(`sources/snapshots.py`):
+url-hash batches and, per batch, runs the fused extract → classify →
+aggregate stage (`operators/fused.py`, ``run_pipeline_fused_with_metrics``:
+one ``mapInArrow`` pass, no shuffle, that also yields the per-partition
+lineage/metrics rows of `metrics.py`) and commits BOTH frames to snapshot
+tables (`sources/snapshots.py`):
 
 * batch membership is a pure function of the url (``xxhash64 % n``), so
   a restart recomputes the same batches;
@@ -16,11 +17,19 @@ rows, `metrics.py`) and commits BOTH frames to snapshot tables
   the data append completes — exactly-once on both tables under any
   crash point (snapshot isolation hides the torn attempt from readers).
 
-``run_pipeline_stream_snapshot`` is the streaming face: ``foreachBatch``
-is at-least-once on retry, and the epoch-id-keyed idempotent append
+``run_pipeline_stream_snapshot`` is the streaming face (the same fused
+stage, ``run_pipeline_fused``, per micro-batch): ``foreachBatch`` is
+at-least-once on retry, and the epoch-id-keyed idempotent append
 upgrades it to exactly-once without the dynamic-partition-overwrite
 trick (which needs a partitioned layout); with a real Iceberg catalog
 both map to ``MERGE INTO`` on the same call sites.
+
+Both faces take masks as a literal list of ``(label, x0, y0, x1, y1)``
+(default: one full-page ``body`` mask); a DataFrame raises ``TypeError``.
+
+Limitations vs the composed path: the input has one row per url. A url
+repeated across rows (WARC recrawls) lands in the agg table once per row,
+not merged; run ``functions.dedup.keep_latest_revision`` upstream.
 """
 
 from __future__ import annotations
@@ -31,7 +40,11 @@ from typing import Callable, List, Optional, Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from edspdf_spark.operators.fused import literal_masks, run_pipeline_fused
+from edspdf_spark.operators.fused import run_pipeline_fused_with_metrics
 from edspdf_spark.sources.snapshots import SnapshotTable
+
+_DEFAULT_MASKS = [("body", 0.0, 0.0, 1.0, 1.0)]
 
 
 def batch_expr(n_batches: int):
@@ -64,10 +77,7 @@ def run_snapshot_job(
     preserve the committed-batch set, so crash-resume across maintained
     runs keeps its exactly-once contract (tests/test_job.py proves a
     crash-resume THROUGH a compaction+expiry)."""
-    from edspdf_spark.metrics import extract_blocs_with_metrics
-    from edspdf_spark.operators import aggregate_simple, classify_mask
-
-    masks = masks or [("body", 0.0, 0.0, 1.0, 1.0)]
+    masks = masks or _DEFAULT_MASKS  # a DataFrame raises in the first batch
     agg_table = SnapshotTable(spark, os.path.join(base, "agg"))
     met_table = SnapshotTable(spark, os.path.join(base, "metrics"))
     done = agg_table.committed_batches()
@@ -81,11 +91,12 @@ def run_snapshot_job(
         if limit_batches is not None and ran >= limit_batches:
             break
         part = pages.where(batch_expr(n_batches) == b)
-        blocs, metrics, cached = extract_blocs_with_metrics(part, run_id=bid)
-        agg = aggregate_simple(classify_mask(blocs, masks, threshold=threshold))
+        agg, metrics, cached = run_pipeline_fused_with_metrics(
+            part, bid, masks, threshold=threshold
+        )
         met_table.append(metrics, bid)  # idempotent no-op on replay
         agg_table.append(agg, bid)  # THE commit: marks the batch done
-        cached.unpersist()  # one extraction cache per batch must not pile up
+        cached.unpersist()  # one output cache per batch must not pile up
         ran += 1
         out.append((bid, True))
         if compact_every and ran % int(compact_every) == 0:
@@ -120,18 +131,15 @@ def run_pipeline_stream_snapshot(
 ):
     """Streaming pipeline into a snapshot table: each micro-batch commits
     under ``epoch-<id>``, so a foreachBatch retry (at-least-once) hits the
-    idempotence check and the table stays exactly-once."""
-    from edspdf_spark.operators import aggregate_simple, classify_mask, extract_blocs
-
-    masks = masks or [("body", 0.0, 0.0, 1.0, 1.0)]
+    idempotence check and the table stays exactly-once. Masks are checked
+    here: ``process`` runs lazily, per micro-batch."""
+    masks = literal_masks(masks or _DEFAULT_MASKS)
     table = SnapshotTable(spark, os.path.join(base, "agg"))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
-        agg = aggregate_simple(
-            classify_mask(extract_blocs(batch_df), masks, threshold=threshold)
-        )
+        agg = run_pipeline_fused(batch_df, masks, threshold=threshold)
         table.append(agg, f"epoch-{batch_id}")
 
     writer = (

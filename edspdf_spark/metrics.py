@@ -1,112 +1,82 @@
 """Per-partition lineage & metrics (custom — the reference has none,
 SURVEY.md §4 "Lineage/metrics").
 
-``extract_blocs_with_metrics`` wraps the extract stage so each task also
-emits one metrics row per input partition: doc/bloc/error counts, input
-bytes and wall time, tagged with the run id and the partition's length
-bucket. The metrics rows travel IN-BAND (single pass over the data — no
-second job, no accumulator loss on retry) in a union-typed frame and are
-split into two DataFrames by the caller; ``persist()`` on the union keeps
-it one pass when both sides are consumed.
+The in-band metrics contract: a stage that reports metrics emits, next to
+its ``AGG_SCHEMA`` rows, one ``METRICS_SCHEMA`` row per input partition
+(doc/bloc/error counts, input bytes and wall time, tagged with the run id
+and the partition's length bucket) — an empty partition included, as a zero row.
+Both kinds travel IN-BAND (single pass over the data — no second job, no
+accumulator loss on retry) in one union-typed frame tagged by ``_kind``,
+which :func:`split_union` splits into the two faces; ``persist()`` on the
+union keeps it one pass when both sides are consumed.
+
+The per-document loop that does the counting is the fused stage's
+(`operators/fused.py`, ``run_pipeline_fused_with_metrics``).
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator, Tuple
+from typing import Dict, Tuple
 
-import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark import TaskContext
 
-from edspdf_spark.kernel.payload import extract_doc
-from edspdf_spark.schemas import BLOC_SCHEMA, METRICS_SCHEMA
+from edspdf_spark.schemas import AGG_SCHEMA, METRICS_SCHEMA
 
-# bloc columns + nullable metrics columns; `_kind` discriminates
-_UNION_SCHEMA = T.StructType(
-    list(BLOC_SCHEMA.fields)
-    + [
-        T.StructField("_kind", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), True),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("bucket", T.IntegerType(), True),
-        T.StructField("n_docs", T.LongType(), True),
-        T.StructField("n_blocs", T.LongType(), True),
-        T.StructField("n_errors", T.LongType(), True),
-        T.StructField("bytes_in", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-    ]
-)
-
-_BLOC_COLS = [f.name for f in BLOC_SCHEMA.fields]
+_AGG_COLS = [f.name for f in AGG_SCHEMA.fields]
 _METRIC_COLS = [f.name for f in METRICS_SCHEMA.fields]
 
 
-def extract_blocs_with_metrics(
-    pages: DataFrame, run_id: str, extract_style: bool = True
-) -> Tuple[DataFrame, DataFrame, DataFrame]:
-    """pages → (blocs, metrics, cached_union) in a single pass — callers
-    materialize both faces then ``cached_union.unpersist()``."""
+class PartitionCounts:
+    """Running counts of one partition, fed once per document; the clock
+    starts when the partition's first batch is pulled."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.perf_counter()
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        n_docs = n_blocs = n_errors = bytes_in = 0
-        max_bucket = 0
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                n_docs += 1
-                nbytes = len(html) if html is not None else 0
-                bytes_in += nbytes
-                max_bucket = max(max_bucket, nbytes.bit_length())
-                blocs, _pages, error = extract_doc(html, extract_style=extract_style)
-                if error:
-                    n_errors += 1
-                    rows.append(
-                        dict.fromkeys(_BLOC_COLS, None)
-                        | {"url": url, "props": [], "error": True, "_kind": "bloc"}
-                    )
-                    continue
-                n_blocs += len(blocs)
-                for b in blocs:
-                    rows.append(
-                        {
-                            "url": url,
-                            **b,
-                            "label": None,
-                            "error": False,
-                            "_kind": "bloc",
-                        }
-                    )
-            out = pd.DataFrame(rows, columns=[f.name for f in _UNION_SCHEMA.fields])
-            yield out
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        metric = dict.fromkeys([f.name for f in _UNION_SCHEMA.fields], None)
-        metric.update(
+    __slots__ = ("t0", "n_docs", "n_blocs", "n_errors", "bytes_in", "bucket")
+
+    def __init__(self) -> None:
+        self.t0 = time.perf_counter()
+        self.n_docs = self.n_blocs = self.n_errors = self.bytes_in = self.bucket = 0
+
+    def add(self, html, n_blocs: int, error: bool) -> None:
+        nbytes = len(html) if html is not None else 0
+        self.n_docs += 1
+        self.n_blocs += n_blocs
+        self.n_errors += bool(error)
+        self.bytes_in += nbytes
+        self.bucket = max(self.bucket, nbytes.bit_length())
+
+    def row(self, run_id: str) -> Dict[str, list]:
+        """The partition's metrics row as one-element columns, ``_kind``
+        included."""
+        ctx = TaskContext.get()
+        row = {c: getattr(self, c) for c in self.__slots__[1:]}
+        row.update(
             _kind="metric",
-            url="",
-            props=[],
-            error=False,
             run_id=run_id,
-            partition_id=pid,
-            bucket=max_bucket,
-            n_docs=n_docs,
-            n_blocs=n_blocs,
-            n_errors=n_errors,
-            bytes_in=bytes_in,
-            wall_ms=wall_ms,
+            partition_id=ctx.partitionId() if ctx else -1,
+            wall_ms=int((time.perf_counter() - self.t0) * 1000),
         )
-        yield pd.DataFrame([metric], columns=[f.name for f in _UNION_SCHEMA.fields])
+        return {k: [v] for k, v in row.items()}
 
-    union = pages.select("url", "html").mapInPandas(work, schema=_UNION_SCHEMA)
+
+# AGG + ``_kind`` + metrics columns at their declared nullability: a row
+# zero-fills (``""`` / ``0``) the other side's non-null columns.
+UNION_SCHEMA = T.StructType(
+    list(AGG_SCHEMA.fields)
+    + [T.StructField("_kind", T.StringType(), False)]
+    + list(METRICS_SCHEMA.fields)
+)
+
+
+def split_union(union: DataFrame) -> Tuple[DataFrame, DataFrame, DataFrame]:
+    """union → (aggregate rows, metrics rows, persisted union). Callers
+    materialize both faces then ``unpersist()`` the union — otherwise each
+    batch of a job leaves its output pinned in the CacheManager for the
+    session lifetime."""
     union = union.persist()
-    blocs = union.filter(F.col("_kind") == "bloc").select(*_BLOC_COLS)
+    rows = union.filter(F.col("_kind") == "data").select(*_AGG_COLS)
     metrics = union.filter(F.col("_kind") == "metric").select(*_METRIC_COLS)
-    # hand the persisted frame back so batch drivers (run_snapshot_job)
-    # can unpersist after materializing both faces — otherwise each batch
-    # leaves a full extraction dataset pinned in the CacheManager for the
-    # session lifetime
-    return blocs, metrics, union
+    return rows, metrics, union

@@ -23,7 +23,7 @@ from edspdf_spark.operators.align import (
     align_plain,
     partition_lines,
 )
-from edspdf_spark.operators.fused import run_pipeline_fused
+from edspdf_spark.operators.fused import run_pipeline_fused, run_pipeline_fused_with_metrics
 from edspdf_spark.operators.order import (
     pairwise_order_features,
     train_order_following,
@@ -58,6 +58,7 @@ __all__ = [
     "partition_lines",
     "merge_boxes",
     "run_pipeline_fused",
+    "run_pipeline_fused_with_metrics",
     "pairwise_order_features",
     "train_order_following",
     "order_followings",

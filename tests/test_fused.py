@@ -112,3 +112,43 @@ def test_all_corrupt_corpus_yields_zero_rows(spark):
     assert aggregate_simple(
         classify_mask(extract_blocs(corrupt), MASKS, 0.1)
     ).count() == 0
+
+
+def test_fused_metrics_rows_empty_and_corrupt(spark):
+    """One metrics row per partition, with exactly METRICS_SCHEMA's
+    columns: an empty document counts as a document but not as an error,
+    a corrupt one counts as both, and an empty partition yields a zero
+    row. Both faces keep their declared schemas and the aggregate face
+    equals run_pipeline_fused."""
+    from edspdf_spark.operators import (
+        extract_blocs,
+        run_pipeline_fused,
+        run_pipeline_fused_with_metrics,
+    )
+    from edspdf_spark.schemas import AGG_SCHEMA, METRICS_SCHEMA
+
+    good = [tuple(r) for r in build_pages_df(spark, 2, partitions=1).select("url", "html").collect()]
+    rows = good + [("doc://empty", b""), ("doc://corrupt", b"CORRUPT\n")]
+    # 4 rows over 5 slices: slice 0 is empty, then one document per slice
+    pages = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 5), "url string, html binary"
+    )
+    agg, metrics, cached = run_pipeline_fused_with_metrics(pages, "r", MASKS, threshold=0.1)
+    # the declared schemas, nullability included
+    assert metrics.schema == METRICS_SCHEMA
+    assert agg.schema == AGG_SCHEMA
+    m = {r.partition_id: r for r in metrics.collect()}
+    assert sorted(m) == [0, 1, 2, 3, 4]
+    assert all(r.run_id == "r" for r in m.values())
+    counts = {p: (r.n_docs, r.n_blocs, r.n_errors, r.bytes_in, r.bucket) for p, r in m.items()}
+    assert counts[0] == (0, 0, 0, 0, 0)  # the empty partition
+    assert counts[3] == (1, 0, 0, 0, 0)  # the empty document
+    assert counts[4] == (1, 0, 1, 8, 4)  # b"CORRUPT\n"
+    for pid, (_url, html) in zip((1, 2), good):
+        assert (m[pid].n_docs, m[pid].n_errors, m[pid].bytes_in) == (1, 0, len(html))
+        assert m[pid].bucket == len(html).bit_length()
+    assert sum(r.n_blocs for r in m.values()) == (
+        extract_blocs(pages).filter(~F.col("error")).count()
+    ) > 0
+    assert _collect_agg(agg) == _collect_agg(run_pipeline_fused(pages, MASKS, threshold=0.1))
+    cached.unpersist()

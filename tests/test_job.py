@@ -67,10 +67,12 @@ def test_job_crash_between_metrics_and_data_commit(spark, tmp_path):
     pages = build_pages_df(spark, 60, partitions=2)
     base = str(tmp_path / "job3")
     from edspdf_spark.job import batch_expr
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.operators import run_pipeline_fused_with_metrics
 
     part0 = pages.where(batch_expr(2) == 0)
-    _, metrics, _ = extract_blocs_with_metrics(part0, run_id="batch-00000")
+    _, metrics, _ = run_pipeline_fused_with_metrics(
+        part0, "batch-00000", MASKS, threshold=0.1
+    )
     agg_t, met_t = job_tables(spark, base)
     met_t.append(metrics, "batch-00000")  # crash here: data never landed
     res = run_snapshot_job(spark, pages, base, masks=MASKS, n_batches=2)
@@ -132,3 +134,59 @@ def test_job_crash_resume_through_maintenance(spark, tmp_path):
     # replay after maintenance is still a full no-op
     third = run_snapshot_job(spark, pages, base, masks=MASKS, n_batches=4)
     assert [ran for _, ran in third] == [False] * 4
+
+
+def test_job_batch_plan_has_no_exchange(spark, tmp_path, monkeypatch):
+    """Every frame the job commits per batch (metrics, then data) is one
+    fused stage over the scan: no Exchange anywhere in its plan."""
+    from edspdf_spark.sources.snapshots import SnapshotTable
+
+    path = str(tmp_path / "pages")
+    build_pages_df(spark, 60, partitions=2).write.parquet(path)
+    pages = spark.read.parquet(path)
+    plans = []
+    real_append = SnapshotTable.append
+
+    def recording_append(self, df, batch_id):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_append(self, df, batch_id)
+
+    monkeypatch.setattr(SnapshotTable, "append", recording_append)
+    run_snapshot_job(spark, pages, str(tmp_path / "job"), masks=MASKS, n_batches=2)
+    assert len(plans) == 4  # (metrics, data) × 2 batches
+    assert all("MapInArrow" in p and "Exchange" not in p for p in plans)
+
+
+def test_job_rejects_dataframe_masks(spark, tmp_path):
+    import pytest
+
+    from edspdf_spark.operators import masks_df
+
+    pages = build_pages_df(spark, 20, partitions=1)
+    base = str(tmp_path / "job_df_masks")
+    with pytest.raises(TypeError):
+        run_snapshot_job(spark, pages, base, masks=masks_df(spark, MASKS))
+    with pytest.raises(TypeError):
+        run_pipeline_stream_snapshot(
+            pages, spark, base, str(tmp_path / "ckpt"), masks=masks_df(spark, MASKS)
+        )
+    agg_t, met_t = job_tables(spark, base)
+    assert agg_t.committed_batches() == met_t.committed_batches() == set()
+
+
+def test_job_repeated_url_is_aggregated_per_row(spark, tmp_path):
+    """The job's input has one row per url: a url repeated across rows
+    (a recrawl) is aggregated per row, not merged as the composed
+    groupBy-url would — one set of (url, label) rows per input row."""
+    pages = build_pages_df(spark, 20, partitions=2)
+    url_a, url_b = "https://synth.test/00000003", "https://synth.test/00000004"
+    recrawl = pages.where(F.col("url") == url_b).withColumn("url", F.lit(url_a))
+    assert pages.where(F.col("url") == url_a).count() == recrawl.count() == 1
+    base = str(tmp_path / "job_repeat")
+    run_snapshot_job(spark, pages.unionByName(recrawl), base, masks=MASKS, n_batches=2)
+    agg_t, met_t = job_tables(spark, base)
+    got = _rows(agg_t.read())
+    assert got == sorted(_rows(_expected(pages)) + _rows(_expected(recrawl)))
+    labels_a = [label for url, label, _ in got if url == url_a]
+    assert len(labels_a) > len(set(labels_a))  # duplicate (url, label) rows
+    assert met_t.read().agg(F.sum("n_docs")).first()[0] == 21

@@ -63,14 +63,17 @@ def test_apply_scan_partitioning_sizes_the_scan(spark, tmp_path):
 
 
 def test_extract_with_metrics(spark):
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.operators import extract_blocs, run_pipeline_fused_with_metrics
 
     pages = build_pages_df(spark, 600, partitions=4)
-    blocs, metrics, _cached = extract_blocs_with_metrics(pages, run_id="r1")
+    _agg, metrics, _cached = run_pipeline_fused_with_metrics(
+        pages, "r1", [("body", 0.0, 0.0, 1.0, 1.0)], threshold=0.1
+    )
     m = metrics.collect()
     assert sum(r.n_docs for r in m) == 600
     assert sum(r.n_errors for r in m) == 1  # doc 500 is corrupt
-    assert sum(r.n_blocs for r in m) == blocs.filter(~F.col("error")).count()
+    # n_blocs counts extracted lines: the composed extract is the reference
+    assert sum(r.n_blocs for r in m) == extract_blocs(pages).filter(~F.col("error")).count()
     assert all(r.run_id == "r1" for r in m)
     assert all(r.wall_ms >= 0 for r in m)
     assert sum(r.bytes_in for r in m) > 0
